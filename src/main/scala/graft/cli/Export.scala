@@ -1,6 +1,8 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable.ListBuffer
+
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
 import graft.operators._
@@ -218,28 +220,34 @@ object Export {
     written
   }
 
-  private def ledgerSource(spark: SparkSession, a: Args) = {
+  /** Where a permissive export dumps its poisoned inputs. */
+  private def errorsPath(a: Args): String =
+    a.output.stripSuffix("/") + "_decode_errors"
+
+  /** The export's ledgers. A Dataset the source persists is added to
+    * `cached`, for `run` to release once the sink has written. */
+  private def ledgerSource(spark: SparkSession, a: Args,
+      cached: ListBuffer[Dataset[_]]) = {
     import spark.implicits._
     // --batch-input <datastore tree>: the reference's REAL backfill
     // substrate — zstd LedgerCloseMetaBatch objects (1 ledger/file), the
-    // object-key law pruning the listing to the requested range
+    // object-key law naming the range's objects so nothing is listed
     if (a.batchInput.isDefined && a.permissive) {
-      // poison OBJECTS become reported error rows: counted by the same
-      // observe() metric, dumped beside the output, good ledgers flow on
-      val res = graft.sources.LcmBatchFiles
-        .objectsPermissive(spark, a.batchInput.get, a.networkId).persist()
-      val errs = res.filter(r => r.error.isDefined)
-      val nBad = errs.count()
+      // poison OBJECTS are reported, good ledgers flow on: an error-only
+      // pass over the range's objects feeds the counts and the dump, then
+      // the export reads the same range skipping the objects that throw
+      val report = graft.sources.LcmBatchFiles.decodeErrorsForRange(
+        spark, a.batchInput.get, a.start, a.end, a.networkId)
+      val nBad = report.errors.size
       if (nBad > 0) {
-        val errPath = a.output.stripSuffix("/") + "_decode_errors"
-        errs.toDF().select(col("error"), col("path"))
-          .write.mode("overwrite").json(errPath)
+        val errPath = errorsPath(a)
+        report.errors.toDF("path", "error").select(col("error"), col("path"))
+          .coalesce(1).write.mode("overwrite").json(errPath)
         println(s"""{"xdr_poisoned":$nBad,"errors_path":"$errPath"}""")
       }
-      graft.operators.Stats.observedDecode(res.toDF())
-        .as[graft.sources.LcmBatchFiles.ObjectDecodeResult]
-        .flatMap(_.rows)
-        .filter(r => r.sequence >= a.start && r.sequence <= a.end)
+      printDecodeStats(report.objects, report.objects - nBad, nBad)
+      graft.sources.LcmBatchFiles.ledgerRowsForRange(spark, a.batchInput.get,
+        a.start, a.end, a.networkId, permissive = true)
     } else if (a.batchInput.isDefined)
       graft.sources.LcmBatchFiles.ledgerRowsForRange(
         spark, a.batchInput.get, a.start, a.end, a.networkId)
@@ -255,10 +263,11 @@ object Export {
       case (Some(path), _) if a.permissive =>
         val res = graft.operators.RealXdrSource
           .ledgerRowsPermissive(spark.read.json(path), a.networkId).persist()
+        cached += res
         val errs = res.filter(r => r.error.isDefined)
         val nBad = errs.count()
         if (nBad > 0) {
-          val errPath = a.output.stripSuffix("/") + "_decode_errors"
+          val errPath = errorsPath(a)
           errs.toDF().select(col("error"), col("ledger_header"))
             .write.mode("overwrite").json(errPath)
           println(s"""{"xdr_poisoned":$nBad,"errors_path":"$errPath"}""")
@@ -341,20 +350,29 @@ object Export {
     import spark.implicits._
 
     // permissive-decode observability: print the observe() counters that
-    // ride the export query (frames/decoded/poisoned) once the sink runs
+    // ride the export query (frames/decoded/poisoned) once the sink runs.
+    // Only --xdr-input observes them; --batch-input prints the counts of
+    // its error pass itself
     val unlisten: () => Unit =
       if (a.permissive)
         graft.operators.Stats.listen(spark,
             graft.operators.Stats.DecodeMetricName) { m =>
-          println(s"""{"xdr_frames":${m.getOrElse("frames", 0L)},""" +
-            s""""xdr_decoded":${m.getOrElse("decoded", 0L)},""" +
-            s""""xdr_poisoned":${m.getOrElse("poisoned", 0L)}}""")
+          printDecodeStats(m.getOrElse("frames", 0L),
+            m.getOrElse("decoded", 0L), m.getOrElse("poisoned", 0L))
         }
       else () => ()
-    try runInner(spark, a) finally unlisten()
+    val cached = ListBuffer.empty[Dataset[_]]
+    try runInner(spark, a, cached)
+    finally { unlisten(); cached.foreach(_.unpersist()) }
   }
 
-  private def runInner(spark: SparkSession, a: Args): Unit = {
+  private def printDecodeStats(frames: Long, decoded: Long,
+      poisoned: Long): Unit =
+    println(s"""{"xdr_frames":$frames,"xdr_decoded":$decoded,""" +
+      s""""xdr_poisoned":$poisoned}""")
+
+  private def runInner(spark: SparkSession, a: Args,
+      cached: ListBuffer[Dataset[_]]): Unit = {
     import spark.implicits._
 
     // fail fast on a missing --end for every bounded export command; the
@@ -408,44 +426,37 @@ object Export {
       return
     }
 
+    // the bounded commands' input: the source's ledgers in [start, end]
+    def rangeLedgers = ledgerSource(spark, a, cached)
+      .where(col("sequence").between(a.start, a.end))
+
     a.command match {
       case "export_ledgers" =>
-        sink(StellarTransforms.historyLedgers(
-          ledgerSource(spark, a).where(col("sequence").between(a.start, a.end))), a)
+        sink(StellarTransforms.historyLedgers(rangeLedgers), a)
 
       case "export_transactions" =>
-        sink(StellarTransforms.historyTransactions(
-          ledgerSource(spark, a).where(col("sequence").between(a.start, a.end))), a)
+        sink(StellarTransforms.historyTransactions(rangeLedgers), a)
 
       case "export_operations" =>
-        sink(StellarTransforms.historyOperations(
-          ledgerSource(spark, a).where(col("sequence").between(a.start, a.end))), a)
+        sink(StellarTransforms.historyOperations(rangeLedgers), a)
 
       case "export_effects" =>
-        sink(StellarTradesEffects.historyEffects(
-          ledgerSource(spark, a).where(col("sequence").between(a.start, a.end))), a)
+        sink(StellarTradesEffects.historyEffects(rangeLedgers), a)
 
       case "export_trades" =>
-        sink(StellarTradesEffects.historyTrades(
-          ledgerSource(spark, a).where(col("sequence").between(a.start, a.end))), a)
+        sink(StellarTradesEffects.historyTrades(rangeLedgers), a)
 
       case "export_token_transfers" =>
-        sink(TokenTransfers.fromLedgers(
-          ledgerSource(spark, a).where(col("sequence").between(a.start, a.end)),
-          a.passphrase), a)
+        sink(TokenTransfers.fromLedgers(rangeLedgers, a.passphrase), a)
 
       case "export_assets" =>
-        sink(StellarTransforms.historyAssets(
-          ledgerSource(spark, a).where(col("sequence").between(a.start, a.end))), a)
+        sink(StellarTransforms.historyAssets(rangeLedgers), a)
 
       case "export_ledger_transaction" =>
-        sink(StellarTransforms.ledgerTransactions(
-          ledgerSource(spark, a).where(col("sequence").between(a.start, a.end))
-            .toDF()), a)
+        sink(StellarTransforms.ledgerTransactions(rangeLedgers.toDF()), a)
 
       case "export_contract_events" =>
-        val src = ledgerSource(spark, a)
-          .where(col("sequence").between(a.start, a.end))
+        val src = rangeLedgers
         // real-XDR inputs carry the FULL diagnostic grain (tx meta v3
         // SorobanMeta → TxModel.diag_events); the fixture model carries
         // op-level SAC events only — each substrate gets its renderer
@@ -468,7 +479,7 @@ object Export {
           a.bucket, a.path)
 
       case "export_ledger_entry_changes" =>
-        exportEntryChanges(spark, a)
+        exportEntryChanges(spark, a, cached)
 
       case "get_ledger_range_from_times" =>
         // SURVEY §3.3: once ledgers are a table this is a min/max scan, not
@@ -476,11 +487,11 @@ object Export {
         // own extent; the generated fallback honors --start/--end and only
         // defaults to a 5000-ledger window when no bounds were given.
         val src = a.input match {
-          case Some(_) => ledgerSource(spark, a)
+          case Some(_) => ledgerSource(spark, a, cached)
           case None => ledgerSource(spark,
             // anchor the default window at --start so a bare high start
             // still yields a non-empty generated range
-            a.copy(end = if (a.end > 0) a.end else a.start + 5000L))
+            a.copy(end = if (a.end > 0) a.end else a.start + 5000L), cached)
         }
         val ledgers = StellarTransforms.historyLedgers(src)
           .withColumnRenamed("sequence", "ledger_sequence")
@@ -536,7 +547,8 @@ object Export {
     * file concurrently, and a driver rename pass stamps the reference
     * filenames (FS metadata only, no data movement). At 100 TB the batch
     * count, not the driver, is the parallelism bound. */
-  private def exportEntryChanges(spark: SparkSession, a: Args): Unit = {
+  private def exportEntryChanges(spark: SparkSession, a: Args,
+      cached: ListBuffer[Dataset[_]]): Unit = {
     import graft.sources.LedgerFixtures
     require(a.batchSize > 0, s"batch-size (${a.batchSize}) must be greater than 0")
     // --batch-input: the REAL datastore substrate carries the soroban
@@ -559,10 +571,14 @@ object Export {
       }
     // persisted once: all four state resources project the SAME decoded
     // rows — without this each resource re-reads and re-decodes the tree
-    // (4× read amplification on a real backfill)
-    lazy val realLedgers = graft.sources.LcmBatchFiles.ledgerRowsForRange(
-        spark, a.batchInput.getOrElse(""), a.start, a.end, a.networkId)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // (4× read amplification on a real backfill); released by `run`
+    lazy val realLedgers = {
+      val ds = graft.sources.LcmBatchFiles.ledgerRowsForRange(
+          spark, a.batchInput.getOrElse(""), a.start, a.end, a.networkId)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      cached += ds
+      ds
+    }
 
     lazy val changes = StellarFixture.changes(spark, a.start, a.end,
         includeTrustlines = true)

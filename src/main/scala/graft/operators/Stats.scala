@@ -26,7 +26,10 @@ object Stats {
 
   /** Attach frame/decoded/poisoned counters to a permissive-decode result
     * DataFrame (one row per frame, `error` non-null ⇔ poisoned): the counts
-    * ride the export query itself — no second scan of the backfill input. */
+    * ride the export query itself — no second scan of the input. Serves
+    * `--xdr-input --permissive` only; `--batch-input --permissive` counts
+    * objects in its error pass
+    * ([[graft.sources.LcmBatchFiles.decodeErrorsForRange]]). */
   def observedDecode(df: DataFrame): DataFrame =
     df.observe(DecodeMetricName,
       count(lit(1)).as("frames"),

@@ -4,6 +4,7 @@ import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.file.{Files, Path, Paths}
 
 import com.github.luben.zstd.{ZstdInputStream, ZstdOutputStream}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,11 +19,16 @@ import graft.model.LedgerModel.LedgerRow
   * lexicographic listing descends by sequence and object names spread evenly
   * across bucket index ranges).
   *
-  * Read side: `spark.read.format("binaryFile")` over the tree (partition
-  * pruning by pushed path filters), then ONE executor-side flatMap at the
-  * deserialization boundary — decompress, decode, emit LedgerRows. Map-only:
-  * a 100 TB backfill parallelizes per file exactly like the reference's
-  * BufferedStorageBackend workers.
+  * Read side: a bounded read never lists. The naming law maps
+  * `[start,end]` to its object keys, each task opens its keys directly
+  * through the Hadoop FS and decompresses + decodes them at the
+  * deserialization boundary ([[ledgerRowsForRange]]). Permissive mode is
+  * the same read twice: [[decodeErrorsForRange]] reports the range's
+  * poisoned objects, then `ledgerRowsForRange(permissive = true)` skips
+  * them. Map-only: a 100 TB backfill parallelizes per object exactly like
+  * the reference's BufferedStorageBackend workers. The `binaryFile` reads
+  * ([[ledgerRows]], [[objectsPermissive]]) list the whole tree and serve
+  * only unbounded tools and the traced benchmark.
   */
 object LcmBatchFiles {
 
@@ -129,6 +135,16 @@ object LcmBatchFiles {
       networkId: Array[Byte] = StellarXdr.PublicNetworkId): Seq[LedgerRow] =
     StellarXdr.decodeLedgerCloseMetaBatch(decompress(bytes), networkId)
 
+  /** [[decodeObject]] with its failure as a value: `Left` carries the
+    * reported error text of an object whose decompress or decode threw. */
+  private def tryDecodeObject(bytes: Array[Byte],
+      networkId: Array[Byte] = StellarXdr.PublicNetworkId)
+      : Either[String, Seq[LedgerRow]] =
+    try Right(decodeObject(bytes, networkId))
+    catch {
+      case e: Exception => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}")
+    }
+
   /** The backfill read path: binaryFile scan → executor decode. Column
     * pruning drops `content` siblings; only `.xdr.zstd` objects match. */
   def ledgerRows(spark: SparkSession, rootDir: String,
@@ -148,6 +164,10 @@ object LcmBatchFiles {
   final case class ObjectDecodeResult(path: String, rows: Seq[LedgerRow],
       error: Option[String])
 
+  /** Whole-tree permissive read: lists and decodes every object, whatever
+    * range the caller wants. Only the traced benchmark still uses it;
+    * `export_* --batch-input --permissive` reads its range with
+    * [[decodeErrorsForRange]] and [[ledgerRowsForRange]]. */
   def objectsPermissive(spark: SparkSession, rootDir: String,
       networkId: Array[Byte] = StellarXdr.PublicNetworkId): Dataset[ObjectDecodeResult] = {
     spark.read.format("binaryFile")
@@ -157,12 +177,63 @@ object LcmBatchFiles {
       .select(col("path"), col("content"))
       .as(pathBinEnc)
       .map { case (path, bytes) =>
-        try ObjectDecodeResult(path, decodeObject(bytes, networkId), None)
-        catch {
-          case e: Exception => ObjectDecodeResult(path, Nil,
-            Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
+        tryDecodeObject(bytes, networkId) match {
+          case Right(rows) => ObjectDecodeResult(path, rows, None)
+          case Left(err) => ObjectDecodeResult(path, Nil, Some(err))
         }
       }(objResEnc)
+  }
+
+  /** The range's objects as `(path, bytes)`, each opened inside a task
+    * through the Hadoop FS (any scheme the cluster knows). Keys come from
+    * the naming law, so nothing is listed; an absent object is skipped
+    * (as a listing would never show it), any other read failure fails
+    * the job. */
+  private def rangeObjects(spark: SparkSession, rootDir: String,
+      startSeq: Long, endSeq: Long): RDD[(String, Array[Byte])] = {
+    val paths = (startSeq to endSeq by LedgersPerFile)
+      .map(seq => s"$rootDir/${objectKey(seq)}")
+    val conf = new SerializableHadoopConf(
+      spark.sparkContext.hadoopConfiguration)
+    val slices = math.max(1,
+      math.min(paths.size, spark.sparkContext.defaultParallelism))
+    spark.sparkContext.parallelize(paths, slices).flatMap { p =>
+      val hp = new org.apache.hadoop.fs.Path(p)
+      val fs = hp.getFileSystem(conf.value)
+      try {
+        val in = fs.open(hp)
+        try Some(p -> in.readAllBytes()) finally in.close()
+      } catch {
+        case _: java.io.FileNotFoundException => None
+      }
+    }
+  }
+
+  /** What the permissive error pass found in a range: the objects it
+    * opened, and `(path, error)` for each one whose decode threw. */
+  final case class RangeDecodeErrors(objects: Long,
+      errors: Seq[(String, String)])
+
+  /** The error-only pass of a permissive range read: decode every object
+    * of `[startSeq, endSeq]` and drop its rows, so no `LedgerRow` is
+    * encoded; only the object count and the errors are collected.
+    * Decode is deterministic, so `ledgerRowsForRange(permissive = true)`
+    * over the same range skips exactly these objects. */
+  def decodeErrorsForRange(spark: SparkSession, rootDir: String,
+      startSeq: Long, endSeq: Long,
+      networkId: Array[Byte] = StellarXdr.PublicNetworkId): RangeDecodeErrors = {
+    val nid = networkId
+    val parts = rangeObjects(spark, rootDir, startSeq, endSeq)
+      .mapPartitions { objs =>
+        var n = 0L
+        val errs = Seq.newBuilder[(String, String)]
+        objs.foreach { case (p, bytes) =>
+          n += 1
+          tryDecodeObject(bytes, nid).left.foreach(e => errs += p -> e)
+        }
+        Iterator.single((n, errs.result()))
+      }.collect()
+    RangeDecodeErrors(parts.map(_._1).sum, parts.toSeq.flatMap(_._2).sortBy(_._1))
   }
 
   /** Range-pruned variant: the object-key law maps a ledger range to its
@@ -173,36 +244,21 @@ object LcmBatchFiles {
     * paths — an InMemoryFileIndex parallel-discovery Spark job costing
     * ~0.2 s per query at 128 paths and one driver round-trip per object at
     * backfill scale. Now each TASK opens its assigned objects directly
-    * through the Hadoop FS (any scheme the cluster knows), skipping
-    * absent objects exactly like the old driver-side exists filter;
-    * no driver stats, no listing job, no file index. Decode stays the
-    * same executor-side fail-fast boundary; a full-history job should
-    * still chunk its range into per-job slices, exactly as the
+    * ([[rangeObjects]]); no stat calls, no listing job, no file index.
+    * Decode is the executor-side fail-fast boundary; with `permissive`
+    * an object whose decode throws contributes no rows instead (the
+    * caller reports it through [[decodeErrorsForRange]]). A full-history
+    * job should still chunk its range into per-job slices, exactly as the
     * reference's batch loop does. */
   def ledgerRowsForRange(spark: SparkSession, rootDir: String,
       startSeq: Long, endSeq: Long,
-      networkId: Array[Byte] = StellarXdr.PublicNetworkId): Dataset[LedgerRow] = {
-    val paths = (startSeq to endSeq by LedgersPerFile)
-      .map(seq => s"$rootDir/${objectKey(seq)}")
-    val conf = new SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
-    val slices = math.max(1,
-      math.min(paths.size, spark.sparkContext.defaultParallelism))
+      networkId: Array[Byte] = StellarXdr.PublicNetworkId,
+      permissive: Boolean = false): Dataset[LedgerRow] = {
     val nid = networkId
-    val rows = spark.sparkContext.parallelize(paths, slices)
-      .flatMap { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val fs = hp.getFileSystem(conf.value)
-        val bytes =
-          try {
-            val in = fs.open(hp)
-            try Some(in.readAllBytes()) finally in.close()
-          } catch {
-            // absent object = the old driver-side exists filter; any
-            // OTHER failure (corrupt zstd, bad XDR) still fails the job
-            case _: java.io.FileNotFoundException => None
-          }
-        bytes.iterator.flatMap(decodeObject(_, nid))
+    val rows = rangeObjects(spark, rootDir, startSeq, endSeq)
+      .flatMap { case (_, bytes) =>
+        if (permissive) tryDecodeObject(bytes, nid).getOrElse(Nil)
+        else decodeObject(bytes, nid)
       }
     spark.createDataset(rows)(ledgerRowEnc)
       .filter(r => r.sequence >= startSeq && r.sequence <= endSeq)

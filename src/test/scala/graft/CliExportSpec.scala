@@ -31,6 +31,14 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def ndjsonLines(path: java.nio.file.Path): Seq[String] =
     Files.readAllLines(path).asScala.toSeq.filter(_.nonEmpty)
 
+  /** Run an export from an empty session cache (the fixture sources memo
+    * their ledgers there) and check that it leaves nothing cached. */
+  private def leavesNoCache(body: => Unit): Unit = {
+    spark.catalog.clearCache()
+    body
+    assert(spark.sharedState.cacheManager.isEmpty, "the export left data cached")
+  }
+
   test("all ten entry types export per-batch files with reference filenames") {
     val out = tmpDir("all")
     Export.run(spark, Export.parse(Array(
@@ -229,31 +237,33 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("--permissive --xdr-input: a poison frame is reported (counted in " +
       "the observe() metric, dumped beside the output), never dropped") {
-    // one good real-XDR frame + one truncated header
-    val golden = scala.io.Source.fromFile(
-      "/root/reference/testdata/ledgers/10_ledgers.golden").getLines()
-      .filter(_.trim.nonEmpty).take(1).toSeq.head
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val header = om.readTree(golden).get("ledger_header").asText()
-    val seq = om.readTree(golden).get("sequence").asLong()
-    val tx = om.readTree(scala.io.Source.fromFile(
-      "/root/reference/testdata/transactions/10_ledgers_txs.golden")
-      .getLines().filter(_.trim.nonEmpty).take(1).toSeq.head)
-    val txJson = s"""{"tx_envelope":${tx.get("tx_envelope")},""" +
-      s""""tx_result":${tx.get("tx_result")}}"""
+    // one good real-XDR frame + one truncated header, built by XdrEncode
+    import graft.codec.{Hashes, XdrEncode}
+    val seq = 78001L
+    val header = XdrEncode.ledgerHeader(XdrEncode.HeaderSpec(seq, 1719600000L))
+    val env = XdrEncode.txEnvelopeV1(XdrEncode.TxSpec(
+      sourceKey = Hashes.sha256("perm-src".getBytes("UTF-8")), fee = 100L,
+      seqNum = 7L, ops = Seq(XdrEncode.createAccountOp(
+        Hashes.sha256("perm-dst".getBytes("UTF-8")), 5000000L))))
+    val result = XdrEncode.txResult(100L, 0, Seq(XdrEncode.OpResultSpec(0, 0)))
+    def b64(b: Array[Byte]) = java.util.Base64.getEncoder.encodeToString(b)
+    val txJson = s"""{"tx_envelope":"${b64(env)}",""" +
+      s""""tx_result":"${b64(result)}"}"""
     val in = tmpDir("permissive-in")
     Files.writeString(Paths.get(in, "frames.json"),
-      s"""{"ledger_header":"$header","transactions":[$txJson]}\n""" +
-        s"""{"ledger_header":"${header.dropRight(8)}","transactions":[$txJson]}\n""")
+      s"""{"ledger_header":"${b64(header)}","transactions":[$txJson]}\n""" +
+        s"""{"ledger_header":"${b64(header.dropRight(6))}",""" +
+        s""""transactions":[$txJson]}\n""")
     val out = tmpDir("permissive-out") + "/ledgers"
 
     val stdout = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(stdout)) {
+    // the decoded frames it caches are released after its sink
+    leavesNoCache(Console.withOut(new java.io.PrintStream(stdout)) {
       Export.run(spark, Export.parse(Array(
         "export_ledgers", "--start", seq.toString, "--end", seq.toString,
         "--xdr-input", s"$in/frames.json", "--permissive",
         "--output", out, "--format", "ndjson")))
-    }
+    })
     val printed = stdout.toString("UTF-8")
     // the poisoned count reaches the stats output...
     assert(printed.contains(""""xdr_poisoned":1"""), printed)
@@ -274,6 +284,91 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
         "--xdr-input", s"$in/frames.json",
         "--output", tmpDir("strict-out") + "/x", "--format", "ndjson")))
     }
+  }
+
+  /** A RealXdrFixture datastore tree over `[lo, hi]` (seq % 3 + 1 txs per
+    * ledger) on the `graftcount:` file system, and its local directory. */
+  private def countedTree(lo: Long, hi: Long): (String, String) = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftcount.impl", classOf[CountingFs].getName)
+    val dir = tmpDir("perm-tree")
+    graft.sources.RealXdrFixture.writeBatchTree(dir, lo, hi)
+    (dir, s"graftcount:$dir")
+  }
+
+  /** Truncate one object's zstd frame to half: its decode throws. */
+  private def poison(dir: String, seq: Long): Unit = {
+    val f = Paths.get(dir, graft.sources.LcmBatchFiles.objectKey(seq))
+    val bytes = Files.readAllBytes(f)
+    Files.write(f, java.util.Arrays.copyOf(bytes, bytes.length / 2))
+  }
+
+  /** `export_transactions` over `[lo, hi]` of `tree`, which must leave no
+    * decoded rows cached: the stdout and the exported rows per ledger. */
+  private def exportTxs(tree: String, lo: Long, hi: Long, out: String,
+      flags: String*): (String, Map[Long, Long]) = {
+    val stdout = new java.io.ByteArrayOutputStream()
+    leavesNoCache(Console.withOut(new java.io.PrintStream(stdout)) {
+      Export.run(spark, Export.parse(Array(
+        "export_transactions", "--start", lo.toString, "--end", hi.toString,
+        "--batch-input", tree, "--output", out, "--format", "ndjson") ++ flags))
+    })
+    val perLedger = spark.read.json(out).groupBy("ledger_sequence").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    (stdout.toString("UTF-8"), perLedger)
+  }
+
+  test("--permissive --batch-input reads only its range: an in-range " +
+      "poisoned object is reported, one outside is never opened") {
+    val (lo, hi) = (1002L, 1009L)
+    val (dir, tree) = countedTree(1000L, 1011L)
+    poison(dir, 1005L) // inside [lo, hi]
+    poison(dir, 1010L) // outside
+    val rangeKeys = (lo to hi)
+      .map(s => s"$dir/${graft.sources.LcmBatchFiles.objectKey(s)}").toSet
+
+    CountingFs.reset(dir)
+    val out = tmpDir("perm-range") + "/txs"
+    val (printed, perLedger) = exportTxs(tree, lo, hi, out, "--permissive")
+    // the export opens exactly the range's objects and lists nothing
+    assert(CountingFs.openedPaths.asScala.toSet == rangeKeys)
+    assert(CountingFs.lists.get() == 0)
+    // one poisoned object among the range's eight
+    assert(printed.contains(""""xdr_poisoned":1,"errors_path""""), printed)
+    assert(printed.contains(
+      """{"xdr_frames":8,"xdr_decoded":7,"xdr_poisoned":1}"""), printed)
+    // the dump lists only the in-range key
+    val dumped = spark.read.json(out + "_decode_errors").collect()
+      .map(r => r.getAs[String]("path")).toSeq
+    assert(dumped.size == 1 &&
+      dumped.head.endsWith(graft.sources.LcmBatchFiles.objectKey(1005L)),
+      dumped)
+    // every good in-range ledger exported, with all its transactions
+    assert(perLedger ==
+      (lo to hi).filter(_ != 1005L).map(s => s -> (s % 3 + 1)).toMap)
+
+    // fail-fast default: the same range still throws
+    intercept[org.apache.spark.SparkException] {
+      exportTxs(tree, lo, hi, tmpDir("perm-strict") + "/txs")
+    }
+  }
+
+  test("--permissive --batch-input skips an absent in-range object, as " +
+      "the fail-fast path does") {
+    val (lo, hi) = (2000L, 2007L)
+    val (dir, tree) = countedTree(lo, hi)
+    Files.delete(Paths.get(dir, graft.sources.LcmBatchFiles.objectKey(2003L)))
+    val want = (lo to hi).filter(_ != 2003L).map(s => s -> (s % 3 + 1)).toMap
+
+    val out = tmpDir("perm-absent") + "/txs"
+    val (printed, perLedger) = exportTxs(tree, lo, hi, out, "--permissive")
+    assert(printed.contains(
+      """{"xdr_frames":7,"xdr_decoded":7,"xdr_poisoned":0}"""), printed)
+    assert(!Files.exists(Paths.get(out + "_decode_errors")))
+    assert(perLedger == want)
+
+    val (_, strict) = exportTxs(tree, lo, hi, tmpDir("perm-absent-ff") + "/txs")
+    assert(strict == want)
   }
 
   test("upload_to_gcs: upload-verify-delete over the Hadoop FS abstraction") {
@@ -446,11 +541,12 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     def exportedContractData(tree: String, flags: String*): String = {
       val out = tmpDir("net-cd")
-      Export.run(spark, Export.parse(Array(
+      // the decoded rows it persists for its resources are released
+      leavesNoCache(Export.run(spark, Export.parse(Array(
         "export_ledger_entry_changes", "--start", "77001", "--end", "77001",
         "--batch-input", tree, "--export-type", "contract_data",
         "--batch-size", "64", "--output", out,
-        "--format", "ndjson") ++ flags))
+        "--format", "ndjson") ++ flags)))
       val rows = ndjsonLines(Paths.get(out, "77001-77001-contract_data.txt"))
       assert(rows.size == 1)
       rows.head

@@ -33,7 +33,10 @@ class CountingFs extends RawLocalFileSystem {
     outer(CountingFs.stats.incrementAndGet())(super.exists(p))
   override def open(p: HPath, bufferSize: Int)
       : org.apache.hadoop.fs.FSDataInputStream =
-    outer(CountingFs.opens.incrementAndGet())(super.open(p, bufferSize))
+    outer({
+      CountingFs.opens.incrementAndGet()
+      CountingFs.openedPaths.add(p.toUri.getPath)
+    })(super.open(p, bufferSize))
 }
 
 object CountingFs {
@@ -41,6 +44,8 @@ object CountingFs {
   val rootLists = new AtomicLong(0)
   val stats = new AtomicLong(0)
   val opens = new AtomicLong(0)
+  val openedPaths: java.util.Set[String] =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   @volatile var watchedRoot: String = ""
   // count only CALLER-initiated filesystem calls: the local FS implements
   // e.g. open() via internal getFileStatus probes that a real object-store
@@ -54,7 +59,7 @@ object CountingFs {
     }
   def reset(root: String): Unit = {
     watchedRoot = root; lists.set(0); rootLists.set(0); stats.set(0)
-    opens.set(0)
+    opens.set(0); openedPaths.clear()
   }
 }
 
