@@ -1,5 +1,7 @@
 package graft.codec
 
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
 import java.sql.Timestamp
 import java.util.Base64
 
@@ -250,8 +252,12 @@ object StellarXdr {
     v
   }
 
-  def decodeLedgerHeader(bytes: Array[Byte]): LedgerHeaderX = {
-    val r = new Reader(bytes)
+  def decodeLedgerHeader(bytes: Array[Byte]): LedgerHeaderX =
+    ledgerHeaderFrom(new Reader(bytes))
+
+  /** LedgerHeader from a reader positioned at its version word — the
+    * embedded form inside `LedgerHeaderHistoryEntry`. */
+  private def ledgerHeaderFrom(r: Reader): LedgerHeaderX = {
     val version = r.u32()
     val prev = r.bytes(32)
     // StellarValue: txSetHash, closeTime, upgrades<>, ext(0 | 1 signature)
@@ -1140,21 +1146,33 @@ object StellarXdr {
 
   /** Envelope + result → the model's TxModel: identical shape to what the
     * fixture generator fills, so every downstream transform (P1–P5, trades,
-    * effects) runs unchanged on real bytes. */
+    * effects) runs unchanged on real bytes. The frame path: each blob is
+    * decoded standalone (and must be consumed exactly), then assembled by
+    * the same [[assembleTx]] the LedgerCloseMeta pass uses. */
   def decodeTx(in: TxInput,
       networkId: Array[Byte] = PublicNetworkId): TxModel = {
-    val env = decodeTxEnvelope(b64(in.envelopeB64), networkId)
-    val res = decodeTransactionResult(b64(in.resultB64))
     // optional meta blobs → per-op change rows (offer pre-states, line
     // kinds) and the fee-law balance pairs
-    val meta = Option(in.metaB64).filter(_.nonEmpty)
-      .map(m => decodeTxMeta(b64(m)))
-    val feeChanges = Option(in.feeMetaB64).filter(_.nonEmpty)
-      .map(m => balanceChanges(decodeFeeMeta(b64(m)))).getOrElse(Nil)
-    // LCM v2 postTxApplyFeeProcessing: the fee refund that pre-v2 rode in
-    // the meta's txChangesAfter — surfaced in the same place (changes_after)
-    val postFeeChanges = Option(in.postFeeMetaB64).filter(_.nonEmpty)
-      .map(m => balanceChanges(decodeFeeMeta(b64(m)))).getOrElse(Nil)
+    def blob(s: String): Option[Array[Byte]] =
+      Option(s).filter(_.nonEmpty).map(b64)
+    assembleTx(
+      decodeTxEnvelope(b64(in.envelopeB64), networkId),
+      decodeTransactionResult(b64(in.resultB64)),
+      blob(in.metaB64).map(decodeTxMeta),
+      blob(in.feeMetaB64).map(decodeFeeMeta).getOrElse(Nil),
+      blob(in.postFeeMetaB64).map(decodeFeeMeta).getOrElse(Nil),
+      in.envelopeB64, in.resultB64, in.metaB64, in.feeMetaB64)
+  }
+
+  /** Decoded envelope, result, meta and fee-meta change vectors → TxModel.
+    * The base64 strings are the blobs' own encodings, carried verbatim
+    * into the model's `*_b64` columns. `postFeeMeta` is LCM v2's
+    * postTxApplyFeeProcessing: the fee refund that pre-v2 rode in the
+    * meta's txChangesAfter — surfaced in the same place (changes_after). */
+  private def assembleTx(env: TxEnvelopeX, res: TxResultX,
+      meta: Option[TxMetaX], feeMeta: Seq[(Int, EntryX)],
+      postFeeMeta: Seq[(Int, EntryX)], envelopeB64: String,
+      resultB64: String, metaB64: String, feeMetaB64: String): TxModel = {
     val ops = env.operations.zipWithIndex.map { case (op0, i) =>
       // allow_trust types its line by (code, issuer = acting source): the
       // body carries only the code (`operation.go` allow-trust details), so
@@ -1246,15 +1264,15 @@ object StellarXdr {
       time_max = env.precond.timeBounds.map(_.max),
       ledger_min = env.precond.ledgerBounds.map(_.min),
       ledger_max = env.precond.ledgerBounds.map(_.max),
-      envelope_b64 = in.envelopeB64,
-      result_b64 = in.resultB64,
-      meta_b64 = in.metaB64,
-      fee_meta_b64 = in.feeMetaB64,
+      envelope_b64 = envelopeB64,
+      result_b64 = resultB64,
+      meta_b64 = metaB64,
+      fee_meta_b64 = feeMetaB64,
       signers = if (env.isFeeBump) env.feeBumpSignatures else env.signatures,
       operations = opsWithChanges,
-      fee_changes = feeChanges,
+      fee_changes = balanceChanges(feeMeta),
       changes_after = meta.map(m => balanceChanges(m.txChangesAfter))
-        .getOrElse(Nil) ++ postFeeChanges,
+        .getOrElse(Nil) ++ balanceChanges(postFeeMeta),
       is_fee_bump = env.isFeeBump,
       fee_bump_account_key = env.feeBumpSource.map(_.key),
       inner_hash_hex =
@@ -2009,18 +2027,18 @@ object StellarXdr {
     * fee-law substrate (`getAccountBalanceFromLedgerEntryChanges`,
     * `transaction.go:280-305`). */
   def balanceChanges(changes: Seq[(Int, EntryX)]): Seq[BalanceChange] = {
-    val before = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val after = scala.collection.mutable.Map[String, Long]()
+    // keyed by the account id's bytes (ByteBuffer equality is by content)
+    val before = scala.collection.mutable.LinkedHashMap[ByteBuffer, Long]()
+    val after = scala.collection.mutable.Map[ByteBuffer, Long]()
     changes.foreach { case (kind, e) =>
       if (e.family == "account") {
-        val k = Hashes.hex(e.accountKey)
+        val k = ByteBuffer.wrap(e.accountKey)
         if (kind == 3) before.getOrElseUpdate(k, e.balance)
         else if (kind == 1 || kind == 0) after(k) = e.balance
       }
     }
     before.toSeq.collect { case (k, b) if after.contains(k) =>
-      BalanceChange(
-        java.util.HexFormat.of().parseHex(k), b, after(k))
+      BalanceChange(k.array(), b, after(k))
     }
   }
 
@@ -2039,10 +2057,16 @@ object StellarXdr {
   def decodeLedgerRow(headerB64: String, txs: Seq[TxInput],
       networkId: Array[Byte] = PublicNetworkId): LedgerRow = {
     val headerBytes = b64(headerB64)
-    val h = decodeLedgerHeader(headerBytes)
+    ledgerRowOf(decodeLedgerHeader(headerBytes), Hashes.sha256(headerBytes),
+      headerB64, txs.map(decodeTx(_, networkId)), 0L, 0L)
+  }
+
+  private def ledgerRowOf(h: LedgerHeaderX, ledgerHash: Array[Byte],
+      headerB64: String, txs: Seq[TxModel], sorobanFeeWrite1kb: Long,
+      bucketListSize: Long): LedgerRow =
     LedgerRow(
       sequence = h.ledgerSeq,
-      ledger_hash = Hashes.sha256(headerBytes),
+      ledger_hash = ledgerHash,
       previous_ledger_hash = h.previousLedgerHash,
       header_b64 = headerB64,
       closed_at = new Timestamp(h.closeTime * 1000L),
@@ -2052,37 +2076,36 @@ object StellarXdr {
       base_reserve = h.baseReserve,
       max_tx_set_size = h.maxTxSetSize,
       protocol_version = h.ledgerVersion,
-      soroban_fee_write_1kb = 0L,
+      soroban_fee_write_1kb = sorobanFeeWrite1kb,
       node_id_key = h.nodeId.orNull,
       signature = h.signature.orNull,
-      bucket_list_size = 0L,
-      transactions = txs.map(decodeTx(_, networkId)))
-  }
+      bucket_list_size = bucketListSize,
+      transactions = txs)
 
   // ---- ledger close meta (the datastore wire) --------------------------------
 
-  private def b64e(b: Array[Byte]): String =
-    Base64.getEncoder.encodeToString(b)
-
-  /** Decode one TransactionEnvelope IN PLACE (inside a larger buffer),
-    * returning (computed hash hex, raw slice). */
-  private def envelopeSlice(r: Reader,
-      networkId: Array[Byte]): (String, Array[Byte]) = {
-    val start = r.offset
-    val env = decodeTxEnvelopeFrom(r, r.buf, networkId)
-    (Hashes.hex(env.hash),
-      java.util.Arrays.copyOfRange(r.buf, start, r.offset))
+  /** base64 of `r.buf` from `start` up to the reader's offset: the blob of
+    * the structure just decoded in place. */
+  private def b64Since(r: Reader, start: Int): String = {
+    val enc = Base64.getEncoder.encode(
+      ByteBuffer.wrap(r.buf, start, r.offset - start))
+    new String(enc.array(), StandardCharsets.ISO_8859_1)
   }
 
-  private def slice[T](r: Reader)(f: => T): Array[Byte] = {
-    val start = r.offset; f
-    java.util.Arrays.copyOfRange(r.buf, start, r.offset)
+  /** One tx-set envelope, decoded IN PLACE (inside the LCM buffer): its
+    * hash (the txProcessing pairing key), the decoded envelope and its
+    * blob's base64. */
+  private def txSetEntry(r: Reader,
+      networkId: Array[Byte]): (ByteBuffer, (TxEnvelopeX, String)) = {
+    val start = r.offset
+    val env = decodeTxEnvelopeFrom(r, r.buf, networkId)
+    (ByteBuffer.wrap(env.hash), (env, b64Since(r, start)))
   }
 
   /** GeneralizedTransactionSet (v1): phases → components → envelopes.
     * Parallel phases (proto 23 TransactionPhase v1) fail loudly. */
-  private def generalizedTxSet(r: Reader,
-      networkId: Array[Byte]): Seq[(String, Array[Byte])] = {
+  private def generalizedTxSet(r: Reader, networkId: Array[Byte])
+      : Seq[(ByteBuffer, (TxEnvelopeX, String))] = {
     val v = r.i32()
     if (v != 1) throw new XdrError(s"unsupported GeneralizedTransactionSet v$v")
     r.bytes(32) // previousLedgerHash
@@ -2094,7 +2117,7 @@ object StellarXdr {
             if (compType != 0)
               throw new XdrError(s"unsupported TxSetComponent type $compType")
             r.opt(r.i64()) // baseFee*
-            r.arr(envelopeSlice(r, networkId))
+            r.arr(txSetEntry(r, networkId))
           }.flatten
         case d => throw new XdrError(s"unsupported TransactionPhase v$d")
       }
@@ -2147,11 +2170,18 @@ object StellarXdr {
   }
 
   /** One `LedgerCloseMeta` (v0 classic / v1 protocol-20+ / v2 protocol-23+
-    * datastore layouts) → a LedgerRow via the same per-tx decode the frame
-    * path uses. The envelopes live in the TX SET (arbitrary order);
-    * `txProcessing` carries apply order keyed by transaction hash — the
-    * pairing the reference's ingest library performs. The self-hash law
-    * (LHHE.hash == sha256 of the header bytes) is enforced, not trusted.
+    * datastore layouts) → a LedgerRow, in ONE pass over the buffer. The
+    * envelopes live in the TX SET (arbitrary order); `txProcessing`
+    * carries apply order keyed by transaction hash — the pairing the
+    * reference's ingest library performs. Every structure is decoded
+    * exactly once, in place: each tx-set envelope (hashed as it is
+    * decoded) is kept with its blob, and each txProcessing entry's
+    * result, fee meta, meta and post-fee meta are decoded where they lie.
+    * The decoded parts go straight to [[assembleTx]] — the assembly the
+    * frame path ([[decodeTx]]) shares — with each blob base64-encoded once
+    * for the model's `*_b64` columns. The header is decoded once, and the
+    * self-hash law (LHHE.hash == sha256 of the header bytes) is enforced,
+    * not trusted; the checked hash is the row's `ledger_hash`.
     *
     * v2 (`Stellar-ledger.x` protocol 23) differences, all handled here:
     * `txProcessing` entries are `TransactionResultMetaV1` (ExtensionPoint
@@ -2179,31 +2209,37 @@ object StellarXdr {
     // LedgerHeaderHistoryEntry: hash ‖ header ‖ ext
     val claimedHash = r.bytes(32)
     val headerStart = r.offset
-    decodeLedgerHeaderFrom(r)
+    val header = ledgerHeaderFrom(r)
     val headerBytes =
       java.util.Arrays.copyOfRange(r.buf, headerStart, r.offset)
     skipExtZero(r)
     if (!java.util.Arrays.equals(claimedHash, Hashes.sha256(headerBytes)))
       throw new XdrError("LedgerHeaderHistoryEntry hash != sha256(header)")
-    val envelopes: Map[String, Array[Byte]] = (if (v == 0) {
+    val txSet = (if (v == 0) {
       // TransactionSet: previousLedgerHash ‖ txs<>
-      r.bytes(32); r.arr(envelopeSlice(r, networkId))
+      r.bytes(32); r.arr(txSetEntry(r, networkId))
     } else generalizedTxSet(r, networkId)).toMap
     val txs = r.arr { // txProcessing, apply order
       if (v == 2) r.i32() match { // TransactionResultMetaV1.ext
         case 0 =>
         case d => throw new XdrError(s"unsupported TransactionResultMetaV1 ext $d")
       }
-      val txHash = Hashes.hex(r.bytes(32))
-      val resultB = slice(r)(decodeTxResultFrom(r, allowFeeBump = true))
-      val feeB = slice(r)(ledgerEntryChanges(r))
-      val metaB = slice(r)(txMetaFrom(r))
-      val postFeeB =
-        if (v == 2) slice(r)(ledgerEntryChanges(r)) else Array.emptyByteArray
-      val envB = envelopes.getOrElse(txHash,
-        throw new XdrError(s"txProcessing hash $txHash not in tx set"))
-      TxInput(b64e(envB), b64e(resultB), b64e(metaB), b64e(feeB),
-        if (postFeeB.isEmpty) "" else b64e(postFeeB))
+      val txHash = r.bytes(32)
+      val resultStart = r.offset
+      val res = decodeTxResultFrom(r, allowFeeBump = true)
+      val resultB64 = b64Since(r, resultStart)
+      val feeStart = r.offset
+      val feeMeta = ledgerEntryChanges(r)
+      val feeB64 = b64Since(r, feeStart)
+      val metaStart = r.offset
+      val meta = txMetaFrom(r)
+      val metaB64 = b64Since(r, metaStart)
+      val postFeeMeta = if (v == 2) ledgerEntryChanges(r) else Nil
+      val (env, envB64) = txSet.getOrElse(ByteBuffer.wrap(txHash),
+        throw new XdrError(
+          s"txProcessing hash ${Hashes.hex(txHash)} not in tx set"))
+      assembleTx(env, res, Some(meta), feeMeta, postFeeMeta,
+        envB64, resultB64, metaB64, feeB64)
     }
     r.arr { ledgerUpgrade(r); ledgerEntryChanges(r) } // upgradesProcessing
     r.arr(scpHistoryEntry(r)) // scpInfo: consumed, dropped (reference law)
@@ -2216,30 +2252,9 @@ object StellarXdr {
       bucketListSize = r.u64() // totalByteSizeOfLiveSorobanState
       r.arr(ledgerKey(r)) // evictedKeys (TTL + code/data, post-proto-23)
     }
-    decodeLedgerRow(b64e(headerBytes), txs, networkId).copy(
-      soroban_fee_write_1kb = sorobanFeeWrite1kb,
-      bucket_list_size = bucketListSize)
-  }
-
-  private def decodeLedgerHeaderFrom(r: Reader): Unit = {
-    r.u32(); r.bytes(32) // version, previousLedgerHash
-    r.bytes(32); r.u64() // txSetHash, closeTime
-    val n = r.i32(); (0 until n).foreach(_ => r.varBytes()) // upgrades
-    r.i32() match {
-      case 0 =>
-      case 1 => accountId(r); r.varBytes()
-      case d => throw new XdrError(s"unsupported StellarValue ext $d")
-    }
-    r.bytes(32); r.bytes(32) // txSetResultHash, bucketListHash
-    r.u32(); r.i64(); r.i64() // seq, totalCoins, feePool
-    r.u32(); r.u64() // inflationSeq, idPool
-    r.u32(); r.u32(); r.u32() // baseFee, baseReserve, maxTxSetSize
-    r.bytes(128) // skipList
-    r.i32() match {
-      case 0 =>
-      case 1 => r.u32()
-      case d => throw new XdrError(s"unsupported LedgerHeader ext $d")
-    }
+    ledgerRowOf(header, claimedHash,
+      Base64.getEncoder.encodeToString(headerBytes), txs,
+      sorobanFeeWrite1kb, bucketListSize)
   }
 
   /** `LedgerCloseMetaBatch` — the datastore object payload (1 ledger/file,

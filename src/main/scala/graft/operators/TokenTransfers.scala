@@ -38,36 +38,15 @@ object TokenTransfers {
 
   def fromLedgers(ledgers: Dataset[LedgerRow],
       passphrase: String = graft.codec.SacContractId.PublicPassphrase): DataFrame = {
-    val txGrain = ledgers.select(
-      col("sequence"), col("closed_at"),
-      posexplode(col("transactions")).as(Seq("tx_pos", "tx")))
-
-    // fee events: tx grain
-    val fees = txGrain.select(
-      col("tx.hash_hex").as("transaction_hash"),
-      transactionToid(col("sequence"), col("tx_pos") + 1).as("transaction_id"),
-      lit(null).cast("long").as("operation_id"),
-      lit("fee").as("event_topic"),
-      strkeyAccount(coalesce(col("tx.fee_bump_account_key"), col("tx.source_key")))
-        .as("from"),
-      lit(null).cast("string").as("to"),
-      lit("native").as("asset"),
-      lit("native").as("asset_type"),
-      lit(null).cast("string").as("asset_code"),
-      lit(null).cast("string").as("asset_issuer"),
-      stroopsToXlm(col("tx.fee_charged")).as("amount"),
-      col("tx.fee_charged").cast("string").as("amount_raw"),
-      sacContractOf(lit("native"), lit(null).cast("string"),
-        lit(null).cast("string"), passphrase).as("contract_id"),
-      col("sequence").as("ledger_sequence"),
-      col("closed_at"),
-      lit(null).cast("string").as("to_muxed"),
-      lit(null).cast("string").as("to_muxed_id"))
-
-    val ops = txGrain
-      .where(col("tx.successful"))
+    // one scan: a row per op of a successful tx, or one null-op row for a
+    // failed or op-less tx (posexplode_outer of null / empty); the tx's fee
+    // leg rides at the head of its first row's events
+    val ops = ledgers
+      .select(col("sequence"), col("closed_at"),
+        posexplode(col("transactions")).as(Seq("tx_pos", "tx")))
       .select(col("sequence"), col("closed_at"), col("tx_pos"), col("tx"),
-        posexplode(col("tx.operations")).as(Seq("op_pos", "op")))
+        posexplode_outer(when(col("tx.successful"), col("tx.operations")))
+          .as(Seq("op_pos", "op")))
 
     val ty = col("op.op_type")
     val fromKey = coalesce(col("op.source_key"), col("tx.source_key"))
@@ -183,7 +162,7 @@ object TokenTransfers {
             e("asset_issuer"))),
         e("amount")))
 
-    val eventsArr =
+    val opEvents =
       when(ty === 0, createAccount)
         .when(ty === 1, payment)
         .when(ty.isin(2, 13), pathPayment)
@@ -199,14 +178,28 @@ object TokenTransfers {
         .when(ty === 24, sacLegs)
         .otherwise(noEv)
 
-    val transfers = ops
+    // fee event: the fee account (the bump payer when fee-bumped) pays
+    // the network, one per transaction
+    val firstRow = coalesce(col("op_pos"), lit(0)) === 0
+    val feeEv = ev(lit("fee"),
+      strkeyAccount(coalesce(col("tx.fee_bump_account_key"), col("tx.source_key"))),
+      lit(null).cast("string"), lit("native"), col("tx.fee_charged"))
+    val eventsArr = when(firstRow, concat(array(feeEv), opEvents))
+      .otherwise(opEvents)
+
+    // the fee leg is the first row's event 0: tx grain, no operation id,
+    // its float amount by exact division
+    val isFee = firstRow && col("ev_pos") === 0
+    ops
       .select(col("sequence"), col("closed_at"), col("tx_pos"), col("op_pos"),
         col("tx.hash_hex").as("transaction_hash"),
+        col("tx.fee_charged").as("fee_charged"),
         posexplode(eventsArr).as(Seq("ev_pos", "e")))
       .select(
         col("transaction_hash"),
         transactionToid(col("sequence"), col("tx_pos") + 1).as("transaction_id"),
-        operationToid(col("sequence"), col("tx_pos") + 1, col("op_pos"))
+        when(!isFee,
+          operationToid(col("sequence"), col("tx_pos") + 1, col("op_pos")))
           .as("operation_id"),
         col("e.event_topic").as("event_topic"),
         col("e.from").as("from"),
@@ -224,7 +217,9 @@ object TokenTransfers {
         // float view: the reference's golden rows carry raw × 1e-7 under
         // DOUBLE MULTIPLICATION (600 → 5.9999999999999995e-05), one ulp off
         // from exact division — reproduce the multiply, not a decimal path
-        (col("e.amount_str").cast("double") * 1e-7).as("amount"),
+        // (fee legs keep the exact division)
+        when(isFee, stroopsToXlm(col("fee_charged")))
+          .otherwise(col("e.amount_str").cast("double") * 1e-7).as("amount"),
         col("e.amount_str").as("amount_raw"),
         sacContractOf(
           split_part(col("e.asset"), lit(":"), lit(1)),
@@ -237,8 +232,6 @@ object TokenTransfers {
         col("closed_at"),
         col("e.to_muxed").as("to_muxed"),
         col("e.to_muxed_id").as("to_muxed_id"))
-
-    fees.unionAll(transfers)
   }
 
   /** The SAC contract C-address of an asset (`TokenTransferOutput.

@@ -516,7 +516,7 @@ class LcmPartitionReader(file: String, requiredSchema: StructType,
       val seq = meta.sequence
       if (seq >= lo && seq <= hi) {
         def hexStr(b: Seq[Byte]): Any =
-          UTF8String.fromString(b.map("%02x".format(_)).mkString)
+          UTF8String.fromString(graft.codec.Hashes.hex(b.toArray))
         val values = requiredSchema.fieldNames.map {
           case "sequence" => seq: Any
           case "closed_at" => meta.closedAtEpochMs * 1000L: Any // epoch micros
@@ -568,7 +568,7 @@ private[sources] object LcmRows {
   import graft.codec.Lcm._
 
   private def hex(b: Seq[Byte]): Any =
-    UTF8String.fromString(b.map("%02x".format(_)).mkString)
+    UTF8String.fromString(graft.codec.Hashes.hex(b.toArray))
   private def utf8(s: String): Any = UTF8String.fromString(s)
 
   def atomRow(ca: WireClaimAtom): InternalRow =

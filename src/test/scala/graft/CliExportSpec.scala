@@ -371,6 +371,26 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(strict == want)
   }
 
+  test("export_token_transfers scans its range once: each object is " +
+      "opened exactly once") {
+    val (lo, hi) = (3000L, 3007L)
+    val (dir, tree) = countedTree(lo, hi)
+    CountingFs.reset(dir)
+    val out = tmpDir("tt-once") + "/tt"
+    Export.run(spark, Export.parse(Array(
+      "export_token_transfers", "--start", lo.toString, "--end", hi.toString,
+      "--batch-input", tree, "--output", out, "--format", "ndjson")))
+    assert(CountingFs.opens.get() == hi - lo + 1)
+    assert(CountingFs.openedPaths.asScala.toSet == (lo to hi)
+      .map(s => s"$dir/${graft.sources.LcmBatchFiles.objectKey(s)}").toSet)
+    // every tx (seq % 3 + 1 per ledger) yields its fee leg and its SAC
+    // transfer leg
+    val topics = spark.read.json(out).groupBy("event_topic").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val txs = (lo to hi).map(_ % 3 + 1).sum
+    assert(topics == Map("fee" -> txs, "transfer" -> txs))
+  }
+
   test("upload_to_gcs: upload-verify-delete over the Hadoop FS abstraction") {
     // the reference's K3 contract (upload_to_gcs.go:25-74): copy to the
     // bucket with the LOCAL PATH as the object key, verify the uploaded

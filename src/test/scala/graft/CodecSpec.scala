@@ -150,6 +150,25 @@ class CodecSpec extends AnyFunSuite {
       "ba7816bf8f01cfea414140de5dae2223b00361a396177a9cb410ff61f20015ad")
   }
 
+  test("hex equals the per-byte %02x rendering and round-trips (property)") {
+    import org.scalacheck.{Arbitrary, Gen, Prop, Test}
+    val edgeBytes = Gen.containerOf[Array, Byte](
+      Gen.oneOf(0x00.toByte, 0x7f.toByte, 0x80.toByte, 0xff.toByte))
+    val bytes = Gen.frequency(
+      1 -> Gen.const(Array.emptyByteArray),
+      3 -> edgeBytes,
+      6 -> Gen.containerOf[Array, Byte](Arbitrary.arbitrary[Byte]))
+    val prop = Prop.forAll(bytes) { b =>
+      val h = Hashes.hex(b)
+      h == b.map("%02x".format(_)).mkString &&
+        java.util.Arrays.equals(java.util.HexFormat.of().parseHex(h), b)
+    }
+    val result = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(500)
+      .withInitialSeed(org.scalacheck.rng.Seed(42L)), prop)
+    assert(result.passed, result.status)
+  }
+
   // ---- amounts -------------------------------------------------------------
 
   test("stroops → XLM is correctly rounded") {
